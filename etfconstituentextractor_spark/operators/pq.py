@@ -38,6 +38,8 @@ No reference counterpart (the reference has no vector data at all).
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -129,8 +131,15 @@ def _codebook_sql(cb: np.ndarray) -> str:
 
 def _dlit(v: float) -> str:
     """SQL double literal with exact round-trip (repr is the shortest
-    decimal that parses back to the same bits)."""
-    return f"{float(v)!r}D"
+    decimal that parses back to the same bits). Non-finite values have
+    no numeric literal form (``nanD``/``infD`` parse as column names),
+    so they render as Spark's string casts."""
+    v = float(v)
+    if math.isnan(v):
+        return "double('NaN')"
+    if math.isinf(v):
+        return "double('Infinity')" if v > 0 else "double('-Infinity')"
+    return f"{v!r}D"
 
 
 def _sub_dist(sub_col: str, cb_col: str, round_dp: int | None = None) -> str:

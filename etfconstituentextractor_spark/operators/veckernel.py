@@ -62,9 +62,20 @@ def _list_to_2d(col):
     dim = int(widths[0])
     if not (widths == dim).all():
         raise ValueError(f"ragged vector column (lengths {set(widths.tolist())})")
-    values = col.values.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
     lo, hi = int(offsets[0]), int(offsets[-1])
-    return values[lo:hi].reshape(-1, dim)
+    values = col.values.slice(lo, hi - lo)
+    if values.null_count:
+        raise ValueError("pair-dot kernel requires non-null vector elements")
+    values = values.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    return values.reshape(-1, dim)
+
+
+def _check_same_shape(a, b) -> None:
+    """Pair kernels fold element j of ``a`` with element j of ``b``;
+    mismatched dims have no fold to replay (the JVM ``zip_with`` would
+    null-pad), so they raise instead of truncating."""
+    if a.shape != b.shape:
+        raise ValueError(f"pair-dot vector dims differ: {a.shape} vs {b.shape}")
 
 
 def _fold_dot(a, b):
@@ -106,7 +117,10 @@ def append_pair_dot(
         import pyarrow as pa
 
         for batch in batches:
-            dot = _fold_dot(_list_to_2d(batch.column(va)), _list_to_2d(batch.column(vb)))
+            a = _list_to_2d(batch.column(va))
+            b = _list_to_2d(batch.column(vb))
+            _check_same_shape(a, b)
+            dot = _fold_dot(a, b)
             arrays = [batch.column(n) for n in keep_names]
             arrays.append(pa.array(dot, type=pa.float64()))
             yield pa.RecordBatch.from_arrays(arrays, names=keep_names + [out])
@@ -128,9 +142,12 @@ def _list_to_2d_i64(col):
     dim = int(widths[0])
     if not (widths == dim).all():
         raise ValueError(f"ragged vector column (lengths {set(widths.tolist())})")
-    values = col.values.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
     lo, hi = int(offsets[0]), int(offsets[-1])
-    return values[lo:hi].reshape(-1, dim)
+    values = col.values.slice(lo, hi - lo)
+    if values.null_count:
+        raise ValueError("pair-dot kernel requires non-null vector elements")
+    values = values.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+    return values.reshape(-1, dim)
 
 
 def append_pair_dot_i64(
@@ -157,6 +174,7 @@ def append_pair_dot_i64(
         for batch in batches:
             a = _list_to_2d_i64(batch.column(va))
             b = _list_to_2d_i64(batch.column(vb))
+            _check_same_shape(a, b)
             dot = (a * b).sum(axis=1, dtype="int64") if a.size else a.sum(axis=1)
             arrays = [batch.column(n) for n in keep_names]
             arrays.append(pa.array(dot, type=pa.int64()))

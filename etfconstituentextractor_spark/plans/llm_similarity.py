@@ -234,73 +234,32 @@ def _pqfp_recipe() -> str:
     return hashlib.md5(src.encode()).hexdigest()
 
 
-#: In-PROCESS memo of q70's driver-trained seed codebook (round-15
-#: verdict ask #5: cache PLAN-CONSTRUCTION literal tables in the
-#: builders, never results). train_pq_codebooks' hash-ordered sample
-#: is one collect job per build; within a session the codebook is a
-#: pure function of (corpus fingerprint, params, trainer source), so
-#: re-collecting it per bench run measures a cost no running system
-#: pays — a deployment trains once and serves. Process-local only
-#: (dies with the interpreter): every NEW bench/oracle invocation
-#: still derives it from parquet inside its own timed region, and the
-#: DuckDB oracle re-derives the same codebook relationally on every
-#: correctness run, so a stale entry cannot pass the hash.
-_PQ_CB_MEMO: dict[str, "object"] = {}
-
-
-def _pq_codebooks_memo(sf_dir: str, emb: DataFrame, train):
-    import hashlib
-    import inspect
+def _pqfp_codebook_cached(spark, sf_dir: str, fcand, train) -> DataFrame:
+    """The trained fixed-point codebook, served from the shared
+    corpus-artifact cache (sources/fingerprint.py) — INDEX STATE: a
+    deployment trains its PQ index once per corpus version and serves
+    from it, so re-running the 3 Lloyd rounds inside every query
+    execution (~2.3s warm at sf0.1) measures a cost no steady-state
+    system pays. The cache is correctness-neutral by construction:
+    training is deterministic from the corpus (seeding by md5(vec_id),
+    driver-synced rounds, floored integer centroids — pqfp_train's
+    contract), the key carries the table fingerprint (root-relative
+    path+size+mtime_ns, so any refresh re-trains), and the DuckDB
+    oracle re-derives the SAME codebook relationally on every
+    correctness run — a stale or corrupted cache cannot pass the hash.
+    Value = the M*K codebook rows (index metadata, never corpus
+    data)."""
     import json
+    import os
 
-    from etfconstituentextractor_spark.operators import pq as pq_mod
-    from etfconstituentextractor_spark.sources.fingerprint import table_fingerprint
+    from etfconstituentextractor_spark.sources.fingerprint import (
+        cached_dir,
+        table_fingerprint,
+    )
 
     key = json.dumps(
         {
-            "fp": table_fingerprint(sf_dir, "embeddings"),
-            "m": _PQ_M,
-            "ksub": _PQ_KSUB,
-            "sample_n": _PQ_KSUB,
-            "iters": 0,
-            # live trainer source: an algorithm edit invalidates the
-            # memo without a hand-bumped version (the _pqfp_recipe rule)
-            "recipe": hashlib.md5(inspect.getsource(pq_mod).encode()).hexdigest(),
-        },
-        sort_keys=True,
-    )
-    cb = _PQ_CB_MEMO.get(key)
-    if cb is None:
-        cb = train(emb, m=_PQ_M, ksub=_PQ_KSUB, sample_n=_PQ_KSUB, iters=0)
-        _PQ_CB_MEMO.clear()  # one corpus/config live at a time — no growth
-        _PQ_CB_MEMO[key] = cb
-    return cb
-
-
-def _pqfp_codebook_cached(spark, sf_dir: str, fcand, train) -> DataFrame:
-    """The trained fixed-point codebook, cached by corpus fingerprint
-    + training params — the q22 bucketed-tables / replay staged-chunks
-    discipline applied to INDEX STATE: a deployment trains its PQ
-    index once per corpus version and serves from it, so re-running
-    the 3 Lloyd rounds inside every query execution (~2.3s warm at
-    sf0.1) measures a cost no steady-state system pays. The cache is
-    correctness-neutral by construction: training is deterministic
-    from the corpus (seeding by md5(vec_id), driver-synced rounds,
-    floored integer centroids — pqfp_train's contract), the key
-    carries the table fingerprint (root-relative path+size+mtime_ns,
-    so any refresh re-trains), and the DuckDB oracle re-derives the
-    SAME codebook relationally on every correctness run — a stale or
-    corrupted cache cannot pass the hash. Value = the M*K codebook
-    rows (index metadata, never corpus data)."""
-    import hashlib
-    import json
-    import os
-    import tempfile
-
-    from etfconstituentextractor_spark.sources.fingerprint import table_fingerprint
-
-    sig = json.dumps(
-        {
+            "sf_dir": sf_dir,
             "fp": table_fingerprint(sf_dir, "embeddings"),
             "m": _PQFP_M,
             "k": _PQFP_K,
@@ -319,38 +278,17 @@ def _pqfp_codebook_cached(spark, sf_dir: str, fcand, train) -> DataFrame:
         },
         sort_keys=True,
     )
-    schema = "sub_id bigint, code int, cv array<bigint>"
-    key = hashlib.md5(sig.encode()).hexdigest()[:16]
-    # uid in the name: /tmp is world-shared — publishing over another
-    # user's cache file would EPERM under the sticky bit (round-9
-    # review finding); per-user caches sidestep it entirely
-    uid = os.getuid() if hasattr(os, "getuid") else 0
-    path = os.path.join(tempfile.gettempdir(), f"etfce_pqfp_cb_u{uid}_{key}.json")
-    if os.path.isfile(path):
-        try:
-            with open(path) as fh:
-                doc = json.load(fh)
-        except (OSError, ValueError):
-            doc = None
-        if doc and doc.get("sig") == sig:
-            return spark.createDataFrame(
-                [tuple(r) for r in doc["rows"]], schema=schema
-            )
-    fcb = train(fcand, k=_PQFP_K, iters=_PQFP_ITERS, dsub=_PQFP_DSUB)
-    rows = sorted((r["sub_id"], r["code"], list(r["cv"])) for r in fcb.collect())
-    tmp = f"{path}.tmp-{os.getpid()}"
-    try:
-        with open(tmp, "w") as fh:
-            json.dump({"sig": sig, "rows": rows}, fh)
-        os.replace(tmp, path)  # atomic publish; racers write identical bytes
-    except OSError:
-        # cache publish is best-effort: a permission/space failure must
-        # not fail the query — the trained frame is already in hand
-        try:
-            os.remove(tmp)
-        except OSError:
-            pass
-    return spark.createDataFrame(rows, schema=schema)
+
+    def build(dest):
+        fcb = train(fcand, k=_PQFP_K, iters=_PQFP_ITERS, dsub=_PQFP_DSUB)
+        rows = sorted((r["sub_id"], r["code"], list(r["cv"])) for r in fcb.collect())
+        with open(os.path.join(dest, "codebook.json"), "w") as fh:
+            json.dump(rows, fh)
+
+    served = cached_dir("pqfp_codebook", key, build)
+    with open(os.path.join(served, "codebook.json")) as fh:
+        rows = [tuple(r) for r in json.load(fh)]
+    return spark.createDataFrame(rows, schema="sub_id bigint, code int, cv array<bigint>")
 
 
 @query(
@@ -487,7 +425,7 @@ def q70_similarity_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # REFINEMENT stays the pytest-only training surface, the q51/BPE
     # precedent), rounded-encode so both engines pick identical codes,
     # then the in-plan LUT-join ADC scan.
-    cb = _pq_codebooks_memo(sf_dir, emb, train_pq_codebooks)
+    cb = train_pq_codebooks(emb, m=_PQ_M, ksub=_PQ_KSUB, sample_n=_PQ_KSUB, iters=0)
     enc = pq_encode(
         emb.filter(F.col("vec_id") >= _N_QUERIES), cb, round_dp=9
     )

@@ -37,7 +37,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etfconstituentextractor_spark.sources.fingerprint import table_fingerprint
+from etfconstituentextractor_spark.sources.fingerprint import cached_dir, table_fingerprint
 from etfconstituentextractor_spark.sources.tables import load
 
 #: schema of the staged chunk files (ts already normalized to
@@ -93,26 +93,6 @@ def _write_chunk(df: DataFrame, base: str, idx: int, mtime: float) -> None:
     os.utime(dst, (mtime, mtime))
 
 
-
-def marker_ok(dir_: str, sig: str) -> bool:
-    """True iff ``dir_``'s reuse marker exists and matches ``sig`` —
-    ONE implementation of the staged-layout staleness check (the
-    round-4 postmortem's rule lives here and only here; q62's stream
-    staging and stage_chunks both call it)."""
-    try:
-        with open(os.path.join(dir_, "_STAGED_OK")) as fh:
-            return fh.read() == sig
-    except OSError:
-        return False
-
-
-def write_marker(dir_: str, sig: str) -> None:
-    """Publish ``dir_``'s reuse marker — written LAST by callers, so
-    an interrupted staging has no marker and re-stages."""
-    with open(os.path.join(dir_, "_STAGED_OK"), "w") as fh:
-        fh.write(sig)
-
-
 def stage_chunks(
     spark: SparkSession,
     sf_dir: str,
@@ -145,25 +125,27 @@ def stage_chunks(
     per-query staging cost drops from two full scans+writes to a
     marker check.
 
-    ``reuse=True`` returns an existing staging directory when its
-    marker matches (tag, n_chunks, sf_dir, corpus fingerprint) — every
-    layout recipe is a deterministic function of its tag plus the
-    corpus, so identical layouts are shared across queries and runs,
-    and a corpus refresh (changed size/mtime of events.parquet)
-    invalidates the marker and re-stages. (If a tag's recipe ever
-    changes in code, bump the tag. A caller passing a ``source`` NOT
-    derived from the corpus events table must not set reuse.) Not
-    honored for ``extra_last_chunk`` callers: extras frames can embed
-    query-specific values, and their staging is near-free anyway. The
-    marker is written last: an interrupted staging has no marker and
-    re-stages.
+    ``reuse=True`` serves the layout from the shared corpus-artifact
+    cache (``sources/fingerprint.py:cached_dir``) keyed by (tag,
+    n_chunks, sf_dir, corpus fingerprint) — every layout recipe is a
+    deterministic function of its tag plus the corpus, so identical
+    layouts are shared across queries and runs, and a corpus refresh
+    (changed size/mtime of events.parquet) stages a new generation.
+    (If a tag's recipe ever changes in code, bump the tag. A caller
+    passing a ``source`` NOT derived from the corpus events table must
+    not set reuse.) Not honored for ``extra_last_chunk`` callers:
+    extras frames can embed query-specific values, and their staging
+    is near-free anyway.
     """
-    base = work_dir(sf_dir, tag)
-    marker = os.path.join(base, "_STAGED_OK")
-    sig = f"{tag}|{n_chunks}|{sf_dir}|{_corpus_fingerprint(sf_dir)}"
-    if reuse and extra_last_chunk is None and marker_ok(base, sig):
-        return base
+    if reuse and extra_last_chunk is None:
+        key = f"{tag}|{n_chunks}|{sf_dir}|{_corpus_fingerprint(sf_dir)}"
+        return cached_dir(
+            f"stream_{tag}",
+            key,
+            lambda d: _write_chunks(spark, sf_dir, d, n_chunks, source),
+        )
 
+    base = work_dir(sf_dir, tag)
     if source is None and extra_last_chunk is not None:
         # data chunks == the shared plain layout: link, don't re-stage
         shared = stage_chunks(spark, sf_dir, f"plain{n_chunks}", n_chunks, reuse=True)
@@ -180,14 +162,21 @@ def stage_chunks(
         _write_chunk(extra_last_chunk, base, n_chunks, time.time())
         return base
 
-    # Reusable layouts are built in a scratch dir and atomically
-    # renamed into place: a killed run leaves only scratch (no marker,
-    # never half-read), and if a concurrent process won the rename we
-    # adopt its directory — marker-valid layouts are bit-identical by
-    # construction.
-    build = f"{base}.build-{os.getpid()}" if reuse else base
-    _clean(build)
-    os.makedirs(build, exist_ok=True)
+    _clean(base)
+    os.makedirs(base, exist_ok=True)
+    _write_chunks(spark, sf_dir, base, n_chunks, source)
+    return base
+
+
+def _write_chunks(
+    spark: SparkSession,
+    sf_dir: str,
+    base: str,
+    n_chunks: int,
+    source: DataFrame | None,
+) -> None:
+    """Stage ``source`` (default: corpus `events`) into ``base`` as
+    ``n_chunks`` equal-width event_id ranges with increasing mtimes."""
     ev = source if source is not None else load(spark, sf_dir, "events")
     ev = ev.select(*[f.split(" ")[0] for f in EVENTS_DDL.split(", ")])
     lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
@@ -197,21 +186,7 @@ def stage_chunks(
         cond = F.col("event_id") >= int(lo) + i * width
         if i < n_chunks - 1:
             cond = cond & (F.col("event_id") < int(lo) + (i + 1) * width)
-        _write_chunk(ev.filter(cond), build, i, t0 + i * 10)
-    if not reuse:
-        return base
-    write_marker(build, sig)
-    try:
-        _clean(base)
-        os.rename(build, base)
-    except OSError:
-        # lost the race: keep the winner's layout if its marker is
-        # valid, else fall back to our scratch build
-        if marker_ok(base, sig):
-            _clean(build)
-        else:
-            return build
-    return base
+        _write_chunk(ev.filter(cond), base, i, t0 + i * 10)
 
 
 def read_stream(spark: SparkSession, chunk_dir: str) -> DataFrame:

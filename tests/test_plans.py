@@ -132,31 +132,33 @@ def test_q22_dpp_leg_injects_runtime_partition_filter(spark, sf_dir):
     assert "dynamicpruning" in plan.lower(), plan[:1500]
 
 
-def test_q22_bucketed_fingerprint_cache(spark, sf_dir):
-    """q22's bucketed leg amortizes its table writes behind a corpus
-    fingerprint. The cache must be correctness-neutral: a cached
-    second call returns the same rows, and a fingerprint whose DATA
-    was deleted (tmp cleanup) must trigger a rewrite, never an empty
-    bucketed scan."""
+def test_q22_bucketed_fingerprint_cache(spark, sf_dir, tmp_path, monkeypatch):
+    """q22's bucketed leg amortizes its table writes behind the shared
+    corpus-artifact cache. The cache must be correctness-neutral: a
+    cached second call returns the same rows, and a published cache
+    whose DATA was deleted (tmp cleanup) must trigger a rewrite, never
+    an empty bucketed scan."""
+    import glob
     import os
     import shutil
-    import tempfile
 
     from etfconstituentextractor_spark.plans.joins import q22_join_shuffle_factfact
+
+    monkeypatch.setattr("tempfile.gettempdir", lambda: str(tmp_path))
 
     def rows():
         return sorted(
             map(tuple, q22_join_shuffle_factfact(spark, sf_dir).collect())
         )
 
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"etfce_bucketed_{tag}")
     first = rows()
-    assert os.path.exists(os.path.join(base, "_fingerprint.json"))
+    (base,) = glob.glob(str(tmp_path / "etfce_cache_u*" / "q22_tables-*"))
+    assert os.path.exists(os.path.join(base, "_CACHE_OK"))
     assert rows() == first  # cached-path call, same result
-    # stale marker with deleted data: must rewrite, not go empty
+    # published marker with deleted data: must rewrite, not go empty
     shutil.rmtree(os.path.join(base, "lineitem"))
     assert rows() == first
+    assert os.listdir(os.path.join(base, "lineitem"))
 
 
 def test_bucketed_join_has_no_shuffle(spark, sf_dir):
@@ -803,27 +805,33 @@ def test_q44_rank_trio_adds_no_exchange(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") == 1, plan[:1500]
 
 
-def test_q86_prune_leg_plans_fewer_files(spark, sf_dir):
+def _q86_timetravel_table(spark, sf_dir, tmp_path, monkeypatch) -> str:
+    """Run q86 against a private cache root and return the snapshot
+    table its timetravel/dv/cdf/prune legs read."""
+    import glob
+
+    from etfconstituentextractor_spark.plans.llm_refresh import q86_snapshot_diff
+
+    monkeypatch.setattr("tempfile.gettempdir", lambda: str(tmp_path))
+    q86_snapshot_diff(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    (tbl,) = glob.glob(str(tmp_path / "etfce_cache_u*" / "q86_timetravel-*" / "table"))
+    return tbl
+
+
+def test_q86_prune_leg_plans_fewer_files(spark, sf_dir, tmp_path, monkeypatch):
     """q86's 'prune' leg must actually SKIP files via the manifest's
     doc_id stats: v0/v1 data files are provably empty for
     doc_id >= 2*shift (hash-partitioned writes span the whole base
     range, so their max < 2*shift), leaving only v2's appended late
     files in the plan."""
-    from etfconstituentextractor_spark.plans.llm_refresh import (
-        _INSERT_SHIFT,
-        q86_snapshot_diff,
-    )
-    from etfconstituentextractor_spark.sources.snapshot_table import snapshot_read
-
-    # building the table is a side effect of the query (fingerprint-
-    # cached, so this is cheap when q86 already ran this session)
-    q86_snapshot_diff(spark, sf_dir).write.format("noop").mode("overwrite").save()
     import glob
     import os
-    import tempfile
 
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    tbl = os.path.join(tempfile.gettempdir(), f"etfce_snaptable_{tag}", "table")
+    from etfconstituentextractor_spark.plans.llm_refresh import _INSERT_SHIFT
+    from etfconstituentextractor_spark.sources.snapshot_table import snapshot_read
+
+    # building the table is a side effect of the query
+    tbl = _q86_timetravel_table(spark, sf_dir, tmp_path, monkeypatch)
     assert glob.glob(os.path.join(tbl, "_manifests", "*.json"))
     full = snapshot_read(spark, tbl, 2)
     pruned = snapshot_read(spark, tbl, 2, where=("doc_id", ">=", 2 * _INSERT_SHIFT))
@@ -835,7 +843,7 @@ def test_q86_prune_leg_plans_fewer_files(spark, sf_dir):
     assert pruned.count() == full.filter(f"doc_id >= {2 * _INSERT_SHIFT}").count()
 
 
-def test_q86_dv_leg_is_merge_on_read(spark, sf_dir):
+def test_q86_dv_leg_is_merge_on_read(spark, sf_dir, tmp_path, monkeypatch):
     """q86's 'dv' leg reads v3 = a positional-deletion-vector DELETE:
     the manifest's data file list must be UNCHANGED from v2 (no
     rewrite — the merge-on-read contract) while the read masks
@@ -843,17 +851,11 @@ def test_q86_dv_leg_is_merge_on_read(spark, sf_dir):
     pre-delete rows."""
     import json
     import os
-    import tempfile
 
-    from etfconstituentextractor_spark.plans.llm_refresh import (
-        _DV_DELETE_LT,
-        q86_snapshot_diff,
-    )
+    from etfconstituentextractor_spark.plans.llm_refresh import _DV_DELETE_LT
     from etfconstituentextractor_spark.sources.snapshot_table import snapshot_read
 
-    q86_snapshot_diff(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    tbl = os.path.join(tempfile.gettempdir(), f"etfce_snaptable_{tag}", "table")
+    tbl = _q86_timetravel_table(spark, sf_dir, tmp_path, monkeypatch)
     m2 = json.load(open(os.path.join(tbl, "_manifests", "v00000002.json")))
     m3 = json.load(open(os.path.join(tbl, "_manifests", "v00000003.json")))
     assert m3["op"] == "delete" and m3["files"] == m2["files"]

@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 
 from etfconstituentextractor_spark.operators.pq import (
+    _codebook_sql,
     _hash_order_sample,
     pq_adc_topk,
     pq_encode,
@@ -144,3 +145,16 @@ def test_pq_adc_join_topk_matches_per_query_driver_path(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert marker not in plan
+
+
+def test_codebook_sql_round_trips_non_finite_values(spark):
+    """Codebook/LUT literals must survive non-finite entries: inf and
+    nan render as double('Infinity')/double('NaN') (``infD``/``nanD``
+    parse as unresolved columns) and come back through spark.sql
+    bit-for-bit alongside ordinary values."""
+    cb = np.array([[np.inf, -np.inf], [np.nan, 0.1], [-0.0, 1e-310]])
+    (got,) = spark.sql(f"SELECT {_codebook_sql(cb)} AS cb").first()
+    assert len(got) == 3
+    assert got[0] == [float("inf"), float("-inf")]
+    assert np.isnan(got[1][0]) and got[1][1] == 0.1
+    assert np.array(got[2]).tobytes() == cb[2].tobytes()

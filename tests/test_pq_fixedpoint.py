@@ -193,21 +193,20 @@ def test_assignment_plan_is_broadcast_map_no_point_shuffle(pq_fp, spark):
         assert marker not in plan
 
 
-def test_codebook_cache_invalidates_on_recipe_change(spark, tmp_path):
-    """Round-10 advice regression: the /tmp codebook cache sig must
-    carry a SOURCE-derived recipe term (trainer module + in-plan
-    candidate derivation), not a hand-bumped integer — params + corpus
-    identify the input, and a code edit that skips the bump keeps
-    serving the stale codebook on bench-only runs. Pin the mechanism:
-    (1) a fresh cache is served without retraining, (2) a cache signed
-    under a DIFFERENT recipe is ignored and retrained over, (3) the
-    recipe derives from the live source modules."""
-    import json
-
+def test_codebook_cache_invalidates_on_recipe_change(spark, tmp_path, monkeypatch):
+    """Round-10 advice regression: the codebook cache key must carry a
+    SOURCE-derived recipe term (trainer module + in-plan candidate
+    derivation), not a hand-bumped integer — params + corpus identify
+    the input, and a code edit that skips the bump keeps serving the
+    stale codebook on bench-only runs. Pin the mechanism: (1) a fresh
+    cache is served without retraining, (2) a changed recipe misses
+    the cache and retrains, (3) the recipe derives from the live
+    source modules."""
     from etfconstituentextractor_spark.plans import llm_similarity as sim
 
-    # unique corpus fingerprint so this test can never collide with a
-    # real testdata cache entry
+    # private cache root and corpus: this test can never collide with
+    # a real testdata cache entry
+    monkeypatch.setattr("tempfile.gettempdir", lambda: str(tmp_path))
     sf = tmp_path / "sf"
     sf.mkdir()
     spark.range(3).selectExpr(
@@ -233,42 +232,16 @@ def test_codebook_cache_invalidates_on_recipe_change(spark, tmp_path):
     cb2 = sim._pqfp_codebook_cached(spark, str(sf), fcand, must_not_train)
     assert sorted(map(tuple, cb2.collect())) == sorted(map(tuple, cb1.collect()))
 
-    # tamper the published entry: same params/corpus, different recipe
-    # — exactly what an edited trainer under a forgotten hand-bump
-    # looked like; it must be treated as stale
-    import glob
-    import hashlib
-    import os
-    import tempfile
-
-    sig = json.dumps(
-        {
-            "fp": __import__(
-                "etfconstituentextractor_spark.sources.fingerprint",
-                fromlist=["table_fingerprint"],
-            ).table_fingerprint(str(sf), "embeddings"),
-            "m": sim._PQFP_M, "k": sim._PQFP_K, "iters": sim._PQFP_ITERS,
-            "dsub": sim._PQFP_DSUB, "scale": sim._PQFP_SCALE,
-            "nq": sim._N_QUERIES, "recipe": sim._pqfp_recipe(),
-        },
-        sort_keys=True,
-    )
-    key = hashlib.md5(sig.encode()).hexdigest()[:16]
-    uid = os.getuid() if hasattr(os, "getuid") else 0
-    path = os.path.join(tempfile.gettempdir(), f"etfce_pqfp_cb_u{uid}_{key}.json")
-    assert os.path.isfile(path), "publish should have landed at the sig-keyed path"
-    doc = json.load(open(path))
-    stale_sig = json.loads(doc["sig"])
-    stale_sig["recipe"] = "0" * 32
-    doc["sig"] = json.dumps(stale_sig, sort_keys=True)
-    json.dump(doc, open(path, "w"))
-
+    # same params/corpus, different recipe — exactly what an edited
+    # trainer under a forgotten hand-bump looked like: it must miss
+    live = sim._pqfp_recipe
+    monkeypatch.setattr(sim, "_pqfp_recipe", lambda: "0" * 32)
     calls.clear()
     cb3 = sim._pqfp_codebook_cached(spark, str(sf), fcand, stub_train)
     assert len(calls) == 1, "stale-recipe cache must retrain"
     assert cb3.count() == 2
+    monkeypatch.setattr(sim, "_pqfp_recipe", live)
 
     # the recipe is a function of live source text
     r = sim._pqfp_recipe()
     assert r == sim._pqfp_recipe() and len(r) == 32
-    os.remove(path)

@@ -2695,39 +2695,42 @@ def test_replicate_tolerates_null_key_rows(spark, tmp_path):
     assert _rows(spark, dst) == _rows(spark, src)
 
 
-def test_snapshot_cache_fresh_handles_sharded_root(tmp_path):
-    """Round-11 review: a sharded root manifest has no 'files' key —
-    the freshness check must resolve shard docs, not KeyError into
-    the blanket except (which silently rebuilt every run)."""
+def test_cache_inventory_covers_sharded_manifest_files(tmp_path, monkeypatch):
+    """Round-11 review: a sharded root manifest has no 'files' key, so
+    a freshness check that only read root manifests missed data files
+    listed in shard docs. The shared cache inventories EVERY published
+    file, so losing a data file referenced only through a shard must
+    rebuild, never serve a partial table."""
     import json
 
-    from etfconstituentextractor_spark.plans.llm_refresh import (
-        _snapshot_cache_fresh,
-    )
+    from etfconstituentextractor_spark.sources.fingerprint import cached_dir
 
-    table = str(tmp_path / "table")
-    mdir = os.path.join(table, "_manifests")
-    os.makedirs(mdir)
-    os.makedirs(os.path.join(table, "data"))
-    with open(os.path.join(table, "data", "part-0.parquet"), "w") as fh:
-        fh.write("x")
-    shard = {"files": ["data/part-0.parquet"]}
-    with open(os.path.join(mdir, "v00000000-shard-ab.json"), "w") as fh:
-        json.dump(shard, fh)
-    root = {
-        "version": 0,
-        "n_files": 1,
-        "shards": [{"path": "_manifests/v00000000-shard-ab.json", "n_files": 1}],
-    }
-    with open(os.path.join(mdir, "v00000000.json"), "w") as fh:
-        json.dump(root, fh)
-    fp = {"recipe": 1}
-    marker = str(tmp_path / "_fingerprint.json")
-    with open(marker, "w") as fh:
-        json.dump(fp, fh)
-    assert _snapshot_cache_fresh(table, marker, fp, 1)
-    os.remove(os.path.join(table, "data", "part-0.parquet"))
-    assert not _snapshot_cache_fresh(table, marker, fp, 1)
+    monkeypatch.setattr("tempfile.gettempdir", lambda: str(tmp_path))
+    calls = []
+
+    def build(d):
+        calls.append(d)
+        table = os.path.join(d, "table")
+        mdir = os.path.join(table, "_manifests")
+        os.makedirs(mdir)
+        os.makedirs(os.path.join(table, "data"))
+        with open(os.path.join(table, "data", "part-0.parquet"), "w") as fh:
+            fh.write("x")
+        with open(os.path.join(mdir, "v00000000-shard-ab.json"), "w") as fh:
+            json.dump({"files": ["data/part-0.parquet"]}, fh)
+        root = {
+            "version": 0,
+            "n_files": 1,
+            "shards": [{"path": "_manifests/v00000000-shard-ab.json", "n_files": 1}],
+        }
+        with open(os.path.join(mdir, "v00000000.json"), "w") as fh:
+            json.dump(root, fh)
+
+    d = cached_dir("sharded", "recipe1", build)
+    assert cached_dir("sharded", "recipe1", build) == d and len(calls) == 1
+    os.remove(os.path.join(d, "table", "data", "part-0.parquet"))
+    assert cached_dir("sharded", "recipe1", build) == d and len(calls) == 2
+    assert os.path.exists(os.path.join(d, "table", "data", "part-0.parquet"))
 
 
 def test_merge_source_null_fills_missing_recorded_columns(spark, tmp_path):
@@ -3243,11 +3246,11 @@ def test_sweep_gates_on_subtree_mtime_and_pid(tmp_path):
     import os
     import time
 
-    import etfconstituentextractor_spark.plans.llm_refresh as lr
+    import etfconstituentextractor_spark.sources.fingerprint as fp
 
     base = str(tmp_path / "cache")
     os.makedirs(base)
-    old = time.time() - lr._SWEEP_AGE_SEC - 60
+    old = time.time() - fp._SWEEP_AGE_SEC - 60
 
     fresh_dead = os.path.join(base, "gen-aaa.build-999999999")  # dead pid, fresh
     aged_dead = os.path.join(base, "gen-bbb.build-999999998")  # dead pid, old
@@ -3271,7 +3274,7 @@ def test_sweep_gates_on_subtree_mtime_and_pid(tmp_path):
         os.utime(p, (old, old))
     os.utime(os.path.join(deep_fresh, "table"), (old, old))  # only the leaf is fresh
 
-    lr._sweep_dead_builds(base)
+    fp._sweep_dead_builds(base)
     left = sorted(os.listdir(base))
     assert os.path.basename(fresh_dead) in left  # other-host build: kept
     assert os.path.basename(fresh_aside) in left  # dangling-frame rule
@@ -3290,7 +3293,7 @@ def test_sweep_age_env_override(tmp_path, monkeypatch):
     import os
     import time
 
-    import etfconstituentextractor_spark.plans.llm_refresh as lr
+    import etfconstituentextractor_spark.sources.fingerprint as fp
 
     base = str(tmp_path / "cache")
     os.makedirs(base)
@@ -3299,65 +3302,61 @@ def test_sweep_age_env_override(tmp_path, monkeypatch):
     two_min = time.time() - 120
     os.utime(carcass, (two_min, two_min))
 
-    lr._sweep_dead_builds(base)  # default 6h cutoff: 2-minute dir is fresh
+    fp._sweep_dead_builds(base)  # default 6h cutoff: 2-minute dir is fresh
     assert os.path.exists(carcass)
 
     monkeypatch.setenv("SPARK_GRAFT_SWEEP_AGE_SEC", "not-a-number")
-    lr._sweep_dead_builds(base)  # bad override never crashes or loosens
+    fp._sweep_dead_builds(base)  # bad override never crashes or loosens
     assert os.path.exists(carcass)
 
     monkeypatch.setenv("SPARK_GRAFT_SWEEP_AGE_SEC", "60")
-    lr._sweep_dead_builds(base)  # tightened: 2 minutes is now aged
+    fp._sweep_dead_builds(base)  # tightened: 2 minutes is now aged
     assert not os.path.exists(carcass)
 
 
 def test_merge_table_cache_heals_stale_partial_generation(spark, tmp_path, monkeypatch):
     """Round-12 advice: a published-but-partial generation dir used to
     make the claim rename fail forever — every run rebuilt AND leaked
-    a .build-<pid>. The lost-race fallback now moves the carcass
-    aside and claims, so the cache heals; dead-pid scratch builds are
-    swept; *.stale-* asides stay on disk (dangling-frame rule)."""
+    a .build-<pid>. The publish path now moves the carcass aside and
+    claims, so the cache heals; dead-pid scratch builds are swept;
+    *.stale-* asides stay on disk (dangling-frame rule)."""
     import json
     import os
+    import time as _time
 
     import etfconstituentextractor_spark.plans.llm_refresh as lr
+    from etfconstituentextractor_spark.sources import fingerprint as fp
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
-    monkeypatch.setattr(
-        "tempfile.gettempdir", lambda: str(tmp_path)
+    monkeypatch.setattr("tempfile.gettempdir", lambda: str(tmp_path))
+    table = lr._merge_table(spark, sf_dir)
+    gdir = os.path.dirname(table)
+    base = os.path.dirname(gdir)
+    # make the PUBLISHED generation partial: tmp cleanup ate a data
+    # file while the small marker survived -> never fresh, and a
+    # rename-if-absent publish would fail with ENOTEMPTY forever
+    data = sorted(
+        os.path.join(d, n)
+        for d, _, names in os.walk(table)
+        for n in names
+        if n.endswith(".parquet")
     )
-    base = str(tmp_path / f"etfce_mergetbl_{os.path.basename(sf_dir).replace('.', '_')}")
-    # plant a PARTIAL generation at the final path: marker missing ->
-    # never fresh, and (pre-fix) os.rename(build, gdir_final) would
-    # fail with ENOTEMPTY forever
-    from etfconstituentextractor_spark.sources.fingerprint import table_fingerprint
-    import hashlib
-
-    fp = {"documents": table_fingerprint(sf_dir, "documents"), "recipe": 2}
-    gen = hashlib.md5(json.dumps(fp, sort_keys=True).encode()).hexdigest()[:12]
-    gdir = os.path.join(base, f"gen-{gen}")
-    os.makedirs(os.path.join(gdir, "table"))
-    with open(os.path.join(gdir, "junk.txt"), "w") as fh:
-        fh.write("partial build carcass")
+    os.remove(data[0])
     # and a dead-pid scratch build that should be swept — aged past
     # the round-13 mtime gate (a FRESH dir is presumed in flight,
     # possibly on another host of a shared filesystem, even when the
     # local pid probe says dead)
-    import time as _time
-
-    import etfconstituentextractor_spark.plans.llm_refresh as _lr
-
-    dead = os.path.join(base, f"gen-{gen}.build-999999999")
+    dead = f"{gdir}.build-999999999"
     os.makedirs(dead)
-    old = _time.time() - _lr._SWEEP_AGE_SEC - 60
+    old = _time.time() - fp._SWEEP_AGE_SEC - 60
     os.utime(dead, (old, old))
 
-    table = lr._merge_table(spark, sf_dir)
-    # healed: the FINAL path is now served (not a .build scratch)
-    assert table == os.path.join(gdir, "table")
-    assert lr._snapshot_cache_fresh(
-        table, os.path.join(gdir, "_fingerprint.json"), fp, 3
-    )
+    healed = lr._merge_table(spark, sf_dir)
+    # healed: the FINAL path is served again (not a .build scratch),
+    # complete this time
+    assert healed == table
+    inventory = json.load(open(os.path.join(gdir, "_CACHE_OK")))["files"]
+    assert all(os.path.exists(os.path.join(gdir, f)) for f in inventory)
     # the carcass was moved aside, not destroyed
     asides = [n for n in os.listdir(base) if ".stale-" in n]
     assert len(asides) == 1
@@ -3365,7 +3364,9 @@ def test_merge_table_cache_heals_stale_partial_generation(spark, tmp_path, monke
     assert not os.path.exists(dead)
     assert [n for n in os.listdir(base) if ".build-" in n] == []
     # a second call reuses the healed generation (pure read)
+    marker_ino = os.stat(os.path.join(gdir, "_CACHE_OK")).st_ino
     assert lr._merge_table(spark, sf_dir) == table
+    assert os.stat(os.path.join(gdir, "_CACHE_OK")).st_ino == marker_ino
 
 
 # ---------------------------------------------------------------- round 12:

@@ -16,7 +16,10 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
-from etfconstituentextractor_spark.operators.veckernel import append_pair_dot
+from etfconstituentextractor_spark.operators.veckernel import (
+    append_pair_dot,
+    append_pair_dot_i64,
+)
 
 _HOF = "aggregate(zip_with(a, b, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
 
@@ -108,6 +111,33 @@ def test_pair_dot_rejects_ragged(spark):
     ).coalesce(1)
     with pytest.raises(Exception, match="ragged"):
         append_pair_dot(df, "a", "b", "d").collect()
+
+
+@pytest.mark.parametrize(
+    "kernel, typ", [(append_pair_dot, "double"), (append_pair_dot_i64, "bigint")]
+)
+def test_pair_dot_rejects_null_element(spark, kernel, typ):
+    """A null ELEMENT inside a non-null vector has no fold to replay
+    (NaN/sentinel would rank or sum wrongly) — it must raise."""
+    df = spark.createDataFrame(
+        [(1, [1, None], [1, 2])], "id bigint, a array<bigint>, b array<bigint>"
+    ).selectExpr("id", f"CAST(a AS array<{typ}>) AS a", f"CAST(b AS array<{typ}>) AS b")
+    with pytest.raises(Exception, match="non-null vector elements"):
+        kernel(df, "a", "b", "d").collect()
+
+
+@pytest.mark.parametrize(
+    "kernel, typ", [(append_pair_dot, "double"), (append_pair_dot_i64, "bigint")]
+)
+def test_pair_dot_rejects_mismatched_dims(spark, kernel, typ):
+    """Uniform within each column but different BETWEEN the columns:
+    the pair kernels must raise, never truncate to the shorter dim."""
+    df = spark.createDataFrame(
+        [(1, [1, 2, 3], [1, 2]), (2, [4, 5, 6], [3, 4])],
+        "id bigint, a array<bigint>, b array<bigint>",
+    ).selectExpr("id", f"CAST(a AS array<{typ}>) AS a", f"CAST(b AS array<{typ}>) AS b")
+    with pytest.raises(Exception, match="dims differ"):
+        kernel(df, "a", "b", "d").collect()
 
 
 def test_pair_dot_matches_python_fold(spark):

@@ -4,8 +4,9 @@ attribute the +14% min-to-min drift, 2.57s -> 2.92s across rounds 11
 -> 12, which landed with NO new leg).
 
 Decomposition strategy (the decompose_q99 pattern, adapted): q86 is a
-UNION of independent legs over two fingerprint-cached snapshot tables,
-so instead of cumulative prefixes we time (a) the table cache
+UNION of independent legs over two snapshot tables served from the
+shared corpus-artifact cache (sources/fingerprint.py:cached_dir), so
+instead of cumulative prefixes we time (a) the table cache
 resolution (cold vs warm — the '__bytes' stats capture lands at COMMIT
 time, i.e. only in the cold build), then (b) each leg's frame with a
 noop sink, min-of-3, then (c) the full union as shipped. If the drift
